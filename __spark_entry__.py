@@ -70,10 +70,9 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("lang"),
         F.col("text").alias("content"),
     )
-    # light_stages: interactive single-query path — persist-backed plans,
-    # static planning during the pipeline-internal actions (the per-job
-    # scheduler floor dominates at this scale), no checkpoint store
-    res = run_dedup(spark, docs, CFG, light_stages=True)
+    # no checkpoint store: interactive single-query path, persist-backed
+    # plans
+    res = run_dedup(spark, docs, CFG)
     return res.clusters.join(res.docs.select("doc_id", "sha256"), "doc_id")
 
 
@@ -378,10 +377,9 @@ def _q_dedup_clusters(spark, sf_dir):
         F.col("lang"),
         F.col("text").alias("content"),
     )
-    # light_stages: interactive single-query path — persist-backed plans,
-    # static planning during the pipeline-internal actions (the per-job
-    # scheduler floor dominates at this scale), no checkpoint store
-    res = run_dedup(spark, docs, CFG, light_stages=True)
+    # no checkpoint store: interactive single-query path, persist-backed
+    # plans
+    res = run_dedup(spark, docs, CFG)
     return res.clusters
 
 

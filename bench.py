@@ -148,11 +148,6 @@ def run_dedup_bench(spark, n_files: int) -> tuple[float, int]:
 
     path = ensure_corpus(spark, n_files)
     docs = spark.read.parquet(path)
-    # light-stages mode (default for the bench): resumable checkpoints at
-    # the expensive boundaries only (signatures, verified_edges, clusters,
-    # the two deliverables); the cheap narrow stages between them run as
-    # cached plans. BENCH_LIGHT=0 restores the full 13-stage protocol.
-    light = os.environ.get("BENCH_LIGHT", "1") == "1"
     # JIT warm-up (excluded from the timed window, standard JVM bench
     # practice): one pipeline pass over a small slice compiles every
     # codegen'd stage and initializes shuffle/Arrow machinery, so the
@@ -161,7 +156,7 @@ def run_dedup_bench(spark, n_files: int) -> tuple[float, int]:
         wpath = ensure_corpus(spark, min(4000, n_files))
         wckpt = os.path.join(ckpt_base(), f"warm_{uuid.uuid4().hex[:8]}")
         wres = run_dedup(spark, spark.read.parquet(wpath), DedupConfig(),
-                         checkpoint_dir=wckpt, light_stages=light)
+                         checkpoint_dir=wckpt)
         wres.clusters.count()
         wres.dup_pairs.count()
         shutil.rmtree(wckpt, ignore_errors=True)
@@ -170,7 +165,7 @@ def run_dedup_bench(spark, n_files: int) -> tuple[float, int]:
     # columns), and resumability never carries over between bench runs
     ckpt = os.path.join(ckpt_base(), f"ckpt_{uuid.uuid4().hex[:8]}")
     t0 = time.time()
-    res = run_dedup(spark, docs, DedupConfig(), checkpoint_dir=ckpt, light_stages=light)
+    res = run_dedup(spark, docs, DedupConfig(), checkpoint_dir=ckpt)
     # terminal outputs (cluster_assignments, dup_pairs) are materialized as
     # checkpoint tables by run_dedup itself; row counts come from the
     # write-job Observations in the manifests — no extra count jobs, which
@@ -280,7 +275,6 @@ def main() -> None:
         "cpus": CPUS,
         "warmup_excluded_s": warmup_excluded_s,
         "e2e_attempts_s": e2e_attempts,
-        "light_stages": os.environ.get("BENCH_LIGHT", "1") == "1",
         "placement": _log_placement(),
         "mem_probe_mbps": round(_mem_probe_mbps(), 1),
     }
@@ -526,7 +520,6 @@ def dedup_only() -> None:
         "queries": {"dedup_pipeline_e2e": round(dedup_sec, 3)},
         "sf": _sf_of(SF_DIR),
         "cpus": CPUS,
-        "light_stages": os.environ.get("BENCH_LIGHT", "1") == "1",
         "placement": _log_placement(),
         "mem_probe_mbps": round(_mem_probe_mbps(), 1),
     }

@@ -20,12 +20,18 @@ estimator)."""
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datasketches_spark.config import MAX_THETA_LONG, DedupConfig
+
+# the adversarial-regime threshold of the star-edge fallback, in failed-rep
+# buckets: up to this many bad buckets come back to the driver in one
+# bounded collect (~0.5 MB) and the fallback pair plan stays lazy; past it
+# the bad buckets are counted on the cluster and the cap²-bounded pair
+# self-join is materialized once
+FB_MATERIALIZE_BAD = 20_000
 
 # ---- Jaccard confidence bounds as pure Spark column math --------------
 # The reference's marquee B-over-A bounds machinery
@@ -234,9 +240,6 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
             .distinct()
         )
         s = s.join(F.broadcast(ids), "doc_id", "left_semi")
-    if cfg.verify_mh_band is not None and not with_bounds:
-        return _verify_pairs_two_tier(pairs, s, cfg, left_col, right_col,
-                                      keep_below_threshold)
     a = s.select(
         F.col("doc_id").alias(left_col),
         F.col("minhash").alias("mh_a"),
@@ -265,85 +268,6 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
     return out
 
 
-def _verify_pairs_two_tier(pairs: DataFrame, s: DataFrame, cfg: DedupConfig,
-                           left_col: str, right_col: str,
-                           keep_below_threshold: bool) -> DataFrame:
-    """Two-tier verification (cfg.verify_mh_band — guide §2.3 "shuffle
-    keys and metadata instead of payloads", VERDICT r5 item 2a): tier 1
-    joins the pairs against ONLY (doc_id, minhash) — ~1 KB/row instead of
-    the 4-6+ KB wide row — and computes ``jaccard_minhash``; the KMV entry
-    arrays are exchanged ONLY for pairs whose MinHash estimate lands
-    within ``verify_mh_band`` of the threshold (or above it). Pairs
-    dropped by tier 1 sit far below the threshold (mh_est <
-    t - band ⇒ P(true J >= t) is a deep binomial tail: < 1e-7 at
-    128 perms / band 0.35), so:
-
-    - filter mode: the dropped pairs would have failed the
-      ``jaccard_kmv >= t`` filter anyway — output identical;
-    - keep_below_threshold mode (star verification): dropped pairs are
-      emitted as failed edges with ``jaccard_kmv := jaccard_minhash``
-      (both < t - band by construction; downstream consumes only the
-      pass/fail split and the ids of failed edges, never the magnitude
-      of a failing estimate — verify_star_edges_with_fallback splits at
-      the threshold and then uses failed ids for bad-bucket detection).
-
-    The exchange saving is largest exactly in the boilerplate /
-    bucket-skew regime, where most candidate edges verify far below
-    threshold."""
-    thr = float(cfg.jaccard_threshold)
-    cut = thr - float(cfg.verify_mh_band)
-    a1 = s.select(F.col("doc_id").alias(left_col), F.col("minhash").alias("mh_a"))
-    b1 = s.select(F.col("doc_id").alias(right_col), F.col("minhash").alias("mh_b"))
-    mh_agree = F.size(
-        F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda b: b)
-    )
-    mh_j = mh_agree.cast("double") / F.lit(float(cfg.num_perm))
-    tier1 = (pairs.join(a1, left_col).join(b1, right_col)
-             .select(left_col, right_col, mh_j.alias("jaccard_minhash")))
-    # tier1 feeds two consumers (survivors + dropped) — cut lineage so the
-    # narrow join runs once (executor-local blocks; bounded by pair count)
-    if keep_below_threshold:
-        tier1 = tier1.localCheckpoint(eager=False)
-    survivors = tier1.filter(F.col("jaccard_minhash") >= F.lit(cut))
-    a2 = s.select(
-        F.col("doc_id").alias(left_col),
-        F.col("kmv_entries").alias("kmv_a"),
-        F.col("kmv_theta").alias("theta_a"),
-    )
-    b2 = s.select(
-        F.col("doc_id").alias(right_col),
-        F.col("kmv_entries").alias("kmv_b"),
-        F.col("kmv_theta").alias("theta_b"),
-    )
-    kmv_j = _kmv_jaccard_col(cfg)
-    verified = (survivors.join(a2, left_col).join(b2, right_col)
-                .select(F.col(left_col), F.col(right_col),
-                        kmv_j.alias("jaccard_kmv"), "jaccard_minhash"))
-    if not keep_below_threshold:
-        return verified.filter(F.col("jaccard_kmv") >= F.lit(thr))
-    dropped = tier1.filter(F.col("jaccard_minhash") < F.lit(cut)).select(
-        F.col(left_col), F.col(right_col),
-        F.col("jaccard_minhash").alias("jaccard_kmv"), "jaccard_minhash")
-    return verified.unionByName(dropped)
-
-
-def _kmv_jaccard_col(cfg: DedupConfig):
-    """The jaccard_kmv column alone (same trimmed statistic as
-    ``_jaccard_cols``, without the MinHash leg — for the two-tier path
-    where jaccard_minhash was already computed from the narrow join)."""
-    min_theta = F.least(F.col("theta_a"), F.col("theta_b"))
-    ka = F.filter(F.col("kmv_a"), lambda x: x < min_theta)
-    kb = F.filter(F.col("kmv_b"), lambda x: x < min_theta)
-    inter = F.size(F.array_intersect(ka, kb))
-    n_u = F.size(ka) + F.size(kb) - inter
-    cu, ci, _, corner = _trimmed_ratio_parts(cfg)
-    return (
-        F.when(n_u == 0, corner)
-        .when(n_u <= F.lit(cfg.k), inter.cast("double") / n_u.cast("double"))
-        .otherwise(F.when(cu > 0, ci / cu).otherwise(corner))
-    )
-
-
 def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
                                     sig: DataFrame, cfg: DedupConfig,
                                     broadcast_eligible: bool = False,
@@ -370,8 +294,9 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     materialized as resumable checkpoint sub-stages instead of
     ``localCheckpoint``: executor-local blocks are lost on executor death
     and FAIL the job instead of recomputing, which on a preemptible
-    1000-executor cluster is a reliability bug. ``localCheckpoint`` remains
-    the store-less (interactive query) path."""
+    1000-executor cluster is a reliability bug. Without a store the
+    sub-stages are ``localCheckpoint`` blocks — the path ``run_dedup``
+    takes, whose resumable boundary is the verified_edges stage itself."""
     def _materialize(name: str, compute, upstream: list[str]):
         if store is not None and getattr(store, "enabled", False):
             return store.stage(name, compute, upstream=upstream)
@@ -404,7 +329,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     if broadcast_eligible:
         # non-singleton buckets are usually a tiny fraction of all buckets;
         # when the caller KNOWS the count is broadcastable (the pipeline
-        # reads it off the bucket_stats write-job Observation), hinting it
+        # bounds it from the signature row count), hinting it
         # turns candidate generation into a map-only pass over the bands —
         # no shuffle of the 40x-corpus-sized band table. At true web scale
         # the count is large and the caller leaves this off (shuffle join).
@@ -499,7 +424,6 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # table). An adversarial / boilerplate-heavy corpus makes the failed-rep
     # set huge — an unguarded broadcast there is a driver OOM. ~24 B/row.
     bad_local = None
-    local_cap = int(os.environ.get("DSS_FB_MATERIALIZE_BAD", "20000"))
     if store is not None and getattr(store, "enabled", False):
         n_bad = (store.manifest("bad_buckets") or {}).get("n_rows")
     else:
@@ -511,8 +435,8 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
         # Bounded by the adversarial-regime threshold, so the collect can
         # never pull more than ~0.5 MB; past it, fall back to the exact
         # distributed count (amortized at that scale).
-        rows = bad_buckets.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
+        rows = bad_buckets.limit(FB_MATERIALIZE_BAD + 1).collect()
+        if len(rows) <= FB_MATERIALIZE_BAD:
             n_bad = len(rows)
             if rows:
                 # through pandas, NOT the list-of-Rows overload: under
@@ -552,7 +476,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # intra-bucket self-join can broadcast its build side under the same
     # measured gate as bad_buckets itself — and the anti-join's build side
     # (passed star edges, <= n_memb rows x ~16 B) under the membership
-    # bound. Under static planning (light mode) these hints are the
+    # bound. Under static planning (AQE off) these hints are the
     # difference between map-side joins and three full shuffle stages of
     # fixed scheduler latency each; with AQE they match what runtime
     # re-planning would pick anyway. Both gates fail closed to shuffles at
@@ -579,7 +503,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # self-join is worth running once, so the plan is materialized when
     # n_bad crosses the adversarial-regime threshold — as a resumable
     # sub-stage in the store path.
-    if n_bad is not None and n_bad > int(os.environ.get("DSS_FB_MATERIALIZE_BAD", "20000")):
+    if n_bad is not None and n_bad > FB_MATERIALIZE_BAD:
         fb_pairs = _materialize(
             "fallback_pairs", lambda: fb_pairs,
             upstream=memb_ups + (["star_verified", "bad_buckets"]

@@ -1,19 +1,26 @@
 """End-to-end near-duplicate detection + clustering pipeline.
 
-Stage graph (every stage is a resumable checkpoint, SURVEY §7 stage 1):
+One stage graph. With a checkpoint dir, five stages are resumable parquet
+checkpoints (SURVEY §7 stage 1): signatures, verified_edges, clusters and
+the two deliverables, cluster_assignments and dup_pairs (plus span_pairs
+when ``cfg.span_pass`` is on). The cheap narrow stages between them are
+lazy plans, the multi-consumer ones cached:
 
   docs(doc_id, repo, path, commit, lang, content)
     │ sha2(content, 256)                       [JVM]
     ├─ exact_groups: groupBy(sha256)           [1 shuffle, map-side combine]
     ├─ distinct-content reps                   [reuses exact_groups]
-    ├─ signatures: mapInPandas murmur3/KMV/MinHash/SimHash   [no shuffle]
+    ├─ signatures: mapInPandas murmur3/KMV/MinHash/SimHash   [checkpoint]
     ├─ bands: posexplode(xxhash64 band keys)   [no shuffle]
     ├─ buckets: groupBy(band, bhash) min/count [1 shuffle, skew-immune]
-    ├─ candidate star edges: bands ⋈ buckets   [AQE skew join]
-    ├─ verified edges: KMV Jaccard ≥ t         [2 joins vs signatures]
+    ├─ candidate star edges: bands ⋈ buckets   [broadcast when it fits]
+    ├─ verified edges: KMV Jaccard ≥ t         [checkpoint]
     ├─ all edges = exact ∪ (verified mapped through content reps)
-    ├─ clusters: large-star/small-star CC      [iterative, checkpointed]
-    └─ dup_pairs + cluster assignments + metrics/lineage
+    ├─ clusters: large-star/small-star CC      [checkpoint]
+    └─ dup_pairs + cluster assignments + metrics/lineage  [checkpoints]
+
+Without a checkpoint dir the same graph runs with the small
+intermediates persisted instead. Either way AQE is off for the run.
 
 Near-dup detection runs on *distinct content* only (exact duplicates are
 collapsed first and re-attached through their representative), so a
@@ -48,102 +55,84 @@ class DedupResult:
 
 def run_dedup(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
               checkpoint_dir: str | None = None, id_col: str = "id",
-              collect_metrics: bool = False,
-              light_stages: bool = False) -> DedupResult:
-    """See ``_run_dedup_impl``. In light mode the run additionally switches
-    the session to STATIC planning (AQE off) for its duration: AQE submits
-    one Spark job per query stage, and in constrained single-node
-    environments a job costs ~0.2-0.7 s of fixed scheduler latency — the
-    pipeline dropped from 79 jobs to 27 (same outputs) with AQE off, which
-    is most of light mode's fixed floor. Runtime re-planning buys nothing
-    at light-mode scale anyway: every join that must broadcast is already
-    count-guarded by the pipeline itself. Default (heavy) mode keeps AQE —
-    at web scale its skew-join splitting and runtime re-planning are
-    load-bearing and the per-job floor is noise."""
-    if not light_stages:
-        return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
-                               collect_metrics, light_stages)
-    # SESSION-CONF WINDOW INVARIANT (re-entrant): light mode mutates
-    # session-level conf (adaptive.enabled off + the two data-derived
-    # shuffle.partitions resizes inside _run_dedup_impl). Two concurrent
-    # light runs on one session would otherwise save each other's
-    # transient values as "prev" and restore garbage — the first run in
-    # wins the snapshot, the LAST run out restores it (depth-counted).
-    # Mid-run resizes remain benign cross-talk between concurrent runs
-    # (both performance-only and bounded by the session cap), never a
-    # correctness issue; pinned by test_round6.test_concurrent_light_runs.
-    with _LIGHT_CONF_LOCK:
-        if _LIGHT_CONF_STATE["depth"] == 0:
-            _LIGHT_CONF_STATE["prev"] = (
-                spark.conf.get("spark.sql.adaptive.enabled", "true"),
-                spark.conf.get("spark.sql.shuffle.partitions"),
-            )
+              light_stages: bool = True) -> DedupResult:
+    """Run the pipeline over ``docs`` (see the module docstring).
+
+    ``checkpoint_dir``: root of the resumable checkpoints. A rerun over
+    the same dir, input and config resumes signatures, verified_edges,
+    clusters, cluster_assignments and dup_pairs, and recomputes only the
+    cheap plans between them. Without it nothing is written to disk.
+
+    The session runs with AQE off (static planning) for the duration of
+    the call and gets its previous setting back on return. AQE submits
+    one Spark job per query stage, and a job costs ~0.2-0.7 s of fixed
+    scheduler latency on a single node: the pipeline ran 79 jobs with AQE
+    on against 27 with it off, for the same outputs. Every join that must
+    broadcast is count-guarded by the pipeline itself. Nothing else in
+    the session conf is written.
+
+    ``light_stages`` is accepted for callers of the former two-mode API;
+    only ``True`` (the one mode) is valid."""
+    if light_stages is not True:
+        raise ValueError("run_dedup has a single mode; light_stages must be True")
+    # AQE WINDOW INVARIANT (re-entrant): two concurrent runs on one
+    # session would otherwise save each other's "false" as the previous
+    # value and restore it. The first run in takes the snapshot, the last
+    # run out restores it (depth-counted).
+    with _AQE_LOCK:
+        if _AQE_STATE["depth"] == 0:
+            _AQE_STATE["prev"] = spark.conf.get("spark.sql.adaptive.enabled", "true")
             spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _LIGHT_CONF_STATE["depth"] += 1
+        _AQE_STATE["depth"] += 1
     try:
         # every pipeline-internal action (stage writes, caches, CC rounds)
-        # runs inside this window; the returned heavy tables are parquet
-        # read-backs whose later consumption doesn't care about AQE
-        return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
-                               collect_metrics, light_stages)
+        # runs inside this window; the returned tables are parquet
+        # read-backs (or persisted plans) whose later use doesn't care
+        return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col)
     finally:
-        with _LIGHT_CONF_LOCK:
-            _LIGHT_CONF_STATE["depth"] -= 1
-            if _LIGHT_CONF_STATE["depth"] == 0:
-                prev, prev_sp = _LIGHT_CONF_STATE["prev"]
-                spark.conf.set("spark.sql.adaptive.enabled", prev)
-                spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        with _AQE_LOCK:
+            _AQE_STATE["depth"] -= 1
+            if _AQE_STATE["depth"] == 0:
+                spark.conf.set("spark.sql.adaptive.enabled", _AQE_STATE["prev"])
 
 
-_LIGHT_CONF_LOCK = threading.Lock()
-_LIGHT_CONF_STATE: dict = {"depth": 0, "prev": None}
+_AQE_LOCK = threading.Lock()
+_AQE_STATE: dict = {"depth": 0, "prev": None}
 
 
 def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
-                    checkpoint_dir: str | None = None, id_col: str = "id",
-                    collect_metrics: bool = False,
-                    light_stages: bool = False) -> DedupResult:
-    """``light_stages=True`` keeps resumable parquet checkpoints only at
-    the EXPENSIVE stage boundaries (signatures, verified_edges, clusters,
-    and the two deliverable tables); the cheap narrow stages between them
-    become lazy plans (multi-consumer ones cached). A full checkpoint
-    stage costs ~1 s of fixed overhead (write job + manifest + read-back
-    planning) regardless of data size — at production scale that is
-    noise, but on small-to-medium runs the 13-stage floor dominates wall
-    time. The trade: a crash mid-run re-runs at most the cheap plans
-    between two heavy boundaries, and the intra-verify sub-stages fall
-    back to ``localCheckpoint`` (executor-local blocks — fine
-    single-process / bench; keep the default full-checkpoint mode on
-    preemptible clusters)."""
+                    checkpoint_dir: str | None, id_col: str) -> DedupResult:
+    """A parquet checkpoint stage costs ~1 s of fixed overhead (write job
+    + manifest + read-back planning) whatever the data size, so only the
+    EXPENSIVE boundaries get one. A crash mid-run re-runs at most the
+    cheap plans between two of them; the intra-verify sub-stages use
+    ``localCheckpoint`` (executor-local blocks)."""
     store = CheckpointStore(spark, checkpoint_dir or "", cfg, enabled=bool(checkpoint_dir),
-                            input_fp=input_fingerprint(docs), light=light_stages)
+                            input_fp=input_fingerprint(docs))
     # without a checkpoint dir, persist the small intermediates so the
     # several terminal actions (clusters, pairs) don't re-run the heavy
     # signature stage; checkpointed stages already read back from parquet
     persist = not checkpoint_dir
 
     base = docs.withColumnRenamed(id_col, "doc_id") if id_col != "doc_id" else docs
-    # content is deliberately NOT checkpointed here: docs_meta carries only
-    # the per-row sha256 invariant + identity columns. Checkpointing the
-    # full corpus content (and again in the distinct-reps stage) would
-    # write the whole input twice — at 100 TB that's the most expensive
-    # mistake in the pipeline. Content is written exactly once, in the
-    # distinct-reps stage that feeds signature building.
+    # content is deliberately NOT carried here: docs_meta holds only the
+    # per-row sha256 invariant + identity columns. Content flows once,
+    # through the distinct-reps plan into the signature stage.
     hashed = store.stage(
         "docs_meta",
         lambda: exact_dedup.with_sha256(base).select(
             "doc_id", "repo", "path", "commit", "lang", "sha256"
         ),
-        # light mode: narrow meta table, cached (consumed by exact groups,
-        # exact edges and the final assignment join)
+        # narrow meta table, cached (consumed by exact groups, exact edges
+        # and the final assignment join)
         light=True, cache=True,
     )
 
     exact_groups = store.stage(
         "exact_groups", lambda: exact_dedup.exact_dup_groups(hashed),
-        # light mode: cached — exact_edges is consumed by BOTH the clusters
-        # stage (all_edges) and dup_pairs; uncached, the groupBy would
-        # re-run once per consumer
+        # cached — exact_edges is consumed by BOTH the clusters stage
+        # (all_edges) and dup_pairs; uncached, the groupBy would re-run
+        # once per consumer
         upstream=["docs_meta"], light=True, cache=True,
     )
     exact_edges = exact_dedup.exact_dup_edges(hashed, exact_groups)
@@ -151,9 +140,9 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         exact_edges = exact_edges.persist()
         exact_edges.count()
 
-    # light mode: the docs_meta / exact_groups CACHES are lazy, and their
-    # first consumers (dup_pairs and clusters) run CONCURRENTLY at the end
-    # of the pipeline — two fresh actions planned against a cold cache get
+    # the docs_meta / exact_groups CACHES are lazy, and their first
+    # consumers (dup_pairs and clusters) run CONCURRENTLY at the end of
+    # the pipeline — two fresh actions planned against a cold cache get
     # fresh shuffle ids, so both re-run the corpus scan + sha256 map side
     # (measured: a duplicated 64 core-s stage at 1M files). Materialize
     # the caches in a background thread NOW, overlapped with the python-
@@ -161,7 +150,7 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # well); the await sits right before the consumers fork.
     prewarm = None
     _edge_ups = ["verified_edges", "exact_groups"]
-    if light_stages and store.enabled and not (
+    if store.enabled and not (
             store.is_valid("dup_pairs", store._resolve_upstream(_edge_ups))
             and store.is_valid("clusters", store._resolve_upstream(_edge_ups))):
         # (skipped when BOTH exact-edge consumers resume from valid
@@ -177,136 +166,81 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         _warm_pool.shutdown(wait=False)
 
     n_cores = spark.sparkContext.defaultParallelism
-    # 2x cores: a pandas stage task occupies a JVM thread AND a python
-    # worker, neither saturating a core alone — finer tasks pack the
-    # pair onto cores better and smooth stragglers (measured: 64 parts
-    # beat 32 by ~1.7x on 32 cores for signatures+write)
     reps = store.stage(
         "distinct_reps",
         lambda: exact_dedup.distinct_content_docs(exact_dedup.with_sha256(base)).select(
             "doc_id", "content"
         ),
         upstream=["docs_meta"],
-        # feeds the compute-heavy signature stage: sized to the DATA with a
-        # floor well above 2x any probe-leg core count, so the same
-        # checkpoint gives every consumer parallelism fine-grained tasks
-        # (a handful of straggler tasks at tiny task counts idles a wave)
+        # store-less runs only: a one-file input must not pin the compute-
+        # heavy signature stage to one task. 2x cores: a pandas stage task
+        # occupies a JVM thread AND a python worker, neither saturating a
+        # core alone. With a store the signature write job reads the
+        # corpus directly through this lazy plan (uncached: content is the
+        # one column too big to pin), and the distinct shuffle sets its
+        # task count.
         min_partitions=max(64, 2 * n_cores),
-        # light mode: the full content column is never written at all —
-        # the signature write job reads the corpus directly (uncached:
-        # content is the one column too big to pin)
         light=True,
     )
 
-    # no min_partitions here: the input checkpoint already carries n_cores
-    # files, and mapInPandas preserves partitioning — a repartition would
-    # shuffle the wide signature arrays for nothing
-    if light_stages and checkpoint_dir:
-        # in light mode the signature stage computes straight off the lazy
-        # distinct-content plan, so its task count IS the distinct
-        # shuffle's partition count. The session default (2x cores, e.g.
-        # 16 at local[8]) gives the pipeline's one compute-heavy stage
-        # tasks of ~60+ core-seconds at probe scale — lumpy waves and
-        # straggler idle. Match the checkpointed path's file-count floor
-        # (>= 64) for exactly this stage; the partition sizing AFTER the
-        # signature write shrinks it back down for the narrow tables.
-        prev_sig_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(max(64, prev_sig_sp)))
     sig = store.stage(
         "signatures",
         lambda: build_signatures(reps, cfg),
         upstream=["distinct_reps"],
     )
-    if light_stages and checkpoint_dir:
-        spark.conf.set("spark.sql.shuffle.partitions", str(prev_sig_sp))
-    n_sig_rows = None
     if persist:
         # eager materialization: downstream plans reference this cache from
         # several subtrees (band table, verify a-side, verify b-side); if
         # the cache is still cold those subtrees each recompute the whole
         # signature stage concurrently. The count doubles as the signature
-        # row count the light-mode sizing below would otherwise read off
-        # the write-job manifest.
+        # row count the broadcast sizing below reads off the write-job
+        # manifest otherwise.
         sig = sig.persist()
         n_sig_rows = sig.count()
-    elif checkpoint_dir:
+    else:
         n_sig_rows = (store.manifest("signatures") or {}).get("n_rows")
 
-    if light_stages and n_sig_rows:
-        # static planning (AQE off) means no runtime partition coalescing,
-        # so post-signature shuffles — all over NARROW tables 2-4 orders of
-        # magnitude smaller than the corpus — would each run
-        # shuffle.partitions tiny tasks (the CC stage alone ran 1100+ tasks
-        # on a 7k-edge graph). Size them from the OBSERVED signature row
-        # count instead (free off the write-job manifest / the persist
-        # count): ~5k signature rows per partition, floored at 16 for
-        # parallelism, capped at the session setting. Restored by the
-        # run_dedup wrapper.
-        cur_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        p_small = max(16, min(cur_sp, n_sig_rows // 5000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(p_small))
-
-    # the band table is consumed by FIVE subtrees (bucket stats, star-edge
-    # membership, bad-bucket re-scan, both sides of the fallback self-join);
-    # left as a plan, each consumer re-reads the wide signature parquet and
-    # recomputes 16 band hashes + posexplode. Materialized once it is a
-    # NARROW table (doc_id, band, bhash — ~24 B/row vs the ~1 KB/row
-    # minhash column every re-derivation decodes), so one write replaces
-    # four full signature-column scans — at any scale the narrow-table
-    # reads are strictly cheaper.
+    # the band table is consumed by several subtrees (bucket stats,
+    # star-edge membership); cached, it is a NARROW table (doc_id, band,
+    # bhash — ~24 B/row vs the ~1 KB/row minhash column every
+    # re-derivation decodes), materialized once by its first consumer
     bands = store.stage(
         "bands",
         lambda: lsh.band_table(sig, cfg),
         upstream=["signatures"],
-        # light mode: cached narrow plan instead of a parquet stage — the
-        # same one-materialization guarantee for its 3 consumers
         light=True, cache=True,
     )
     # singleton buckets (the overwhelming majority — ~90% of all buckets
     # at 1M files, and ~everything at 10^12) are consumed by NOTHING
-    # downstream: candidate generation, the fallback pass and both
-    # Observations only ever look at bucket_size > 1. Filtering them
-    # BEFORE the materialization cuts the stats write (and every
-    # downstream rescan/join of the table) ~10x.
+    # downstream: candidate generation and the fallback pass only ever
+    # look at bucket_size > 1. Filtering them before the cache cuts it
+    # (and every downstream rescan/join of the table) ~10x.
     stats = store.stage(
         "bucket_stats",
         lambda: lsh.bucket_stats(bands).filter(F.col("bucket_size") > 1),
         upstream=["bands"],
-        # bucket metrics piggyback on the write job (no count jobs)
-        extra_obs={
-            "n_dropped_buckets":
-                F.count(F.when(F.col("bucket_size") > cfg.bucket_cap, 1)),
-            "n_eligible_buckets":
-                F.count(F.when((F.col("bucket_size") > 1)
-                               & (F.col("bucket_size") <= cfg.bucket_cap), 1)),
-        },
-        # light mode: cached plan; the observed counts (and thus the manual
-        # broadcast hint below) are skipped — AQE sees the real size of the
-        # tiny eligible side at runtime and picks the broadcast join itself
         light=True, cache=True,
     )
     # broadcast the eligible-bucket side of candidate generation when its
-    # observed count fits comfortably in memory (~48B/row); at web scale
-    # the count is huge and this stays a shuffle join
+    # count fits comfortably in memory (~48B/row); at web scale the count
+    # is huge and this stays a shuffle join. Skipped on resume: a valid
+    # verified_edges never needs the caches at all.
     _verify_ups = ["signatures", "bands", "bucket_stats"]
-    n_memb_hint = None
-    if light_stages and (persist or not store.is_valid(
-            "verified_edges", store._resolve_upstream(_verify_ups))):
-        # no write-job Observation in light mode. Small corpora skip the
-        # count job too (a job costs ~0.2-0.7 s of fixed latency here):
-        # when even the WORST-CASE bound off the signature manifest —
-        # every band row its own eligible bucket, bands × n_sig rows ×
-        # ~48 B — fits the broadcast budget, the decision needs no
-        # measurement, and the broadcast-exchange job that builds the
-        # eligible side doubles as the bands/stats cache materializer.
-        # Larger corpora (where the worst case overshoots but the REAL
-        # count is usually still broadcastable — non-singleton buckets
-        # are a tiny fraction) pay ONE aggregation job for an informed
-        # decision; at that scale the job is amortized anyway. The same
-        # job sums eligible bucket sizes == the bucket-membership row
-        # count, saving the verify stage its own count action. Skipped on
-        # resume: a valid verified_edges never needs the caches at all.
+    n_eligible = n_memb_hint = None
+    if persist or not store.is_valid(
+            "verified_edges", store._resolve_upstream(_verify_ups)):
+        # Small corpora skip the count job (a job costs ~0.2-0.7 s of
+        # fixed latency here): when even the WORST-CASE bound off the
+        # signature row count — every band row its own eligible bucket,
+        # bands × n_sig rows × ~48 B — fits the broadcast budget, the
+        # decision needs no measurement, and the broadcast-exchange job
+        # that builds the eligible side doubles as the bands/stats cache
+        # materializer. Larger corpora (where the worst case overshoots
+        # but the REAL count is usually still broadcastable — non-
+        # singleton buckets are a tiny fraction) pay ONE aggregation job
+        # for an informed decision; at that scale the job is amortized
+        # anyway. The same job sums eligible bucket sizes == the bucket-
+        # membership row count, saving the verify stage its own count.
         worst = n_sig_rows * cfg.bands if n_sig_rows else None
         if worst is not None and worst * 48 < 256 * 1024 * 1024:
             n_eligible = worst
@@ -329,47 +263,17 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
             ).first()
             n_eligible = int(row["n_eligible"])
             n_memb_hint = int(row["n_memb"] or 0)
-    else:
-        bucket_obs = (store.manifest("bucket_stats") or {}).get("observed", {})
-        n_eligible = bucket_obs.get("n_eligible_buckets")
     bcast_eligible = n_eligible is not None and n_eligible * 48 < 256 * 1024 * 1024
 
-    if light_stages and n_memb_hint is not None:
-        # second static resize, at the LSH boundary: every shuffle from
-        # here on (star distinct, the verify joins, fallback, dup_pairs,
-        # all CC rounds, cluster assembly) runs over tables bounded by the
-        # bucket MEMBERSHIP row count — typically another ~20x below the
-        # signature count the p_small sizing above used. Event-log
-        # attribution at 1M files showed these stages dispatch-bound, not
-        # compute-bound: ~20 s of wall across the verify/CC/pairs region
-        # went to driver task dispatch of 66-132 near-empty tasks per
-        # stage, identical at every parallelism — i.e. the fixed term that
-        # caps N->4N scaling efficiency. AQE would coalesce these at
-        # runtime; light mode (AQE off) sizes them statically from the
-        # same measurement that priced the broadcast decision, so the
-        # granularity stays DATA-derived (identical across probe legs,
-        # grows back to the session cap as membership grows — a no-op at
-        # web scale).
-        cur_sp2 = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        p_post = max(16, min(cur_sp2, n_memb_hint // 50000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(p_post))
-
-    _, dropped = lsh.candidate_edges(bands, cfg, stats)
     verified = store.stage(
         "verified_edges",
         # star edges + per-bucket pair fallback when a rep-edge fails
-        # verification (closes the false-positive-rep recall hole).
-        # The store rides inside: star_verified / bad_buckets become
-        # resumable sub-stages (reliable storage, not executor-local
-        # localCheckpoint blocks that fail the job on executor loss).
-        # light mode: sub-stages fall back to localCheckpoint (store=None)
-        # — executor-local blocks, the documented light-mode trade
+        # verification (closes the false-positive-rep recall hole); its
+        # sub-stages are localCheckpoint blocks
         lambda: verify.verify_star_edges_with_fallback(
             bands, stats, sig, cfg, broadcast_eligible=bcast_eligible,
-            store=None if light_stages else store,
-            store_upstream=["signatures", "bands", "bucket_stats"],
             n_memb_hint=n_memb_hint),
-        upstream=["signatures", "bands", "bucket_stats"],
+        upstream=_verify_ups,
     )
     if persist:
         verified = verified.persist()
@@ -389,43 +293,31 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # the stage's full fixed cost behind CC wall time. Span mode keeps the
     # serial order (span_pairs feeds dup_pairs); store-less mode has no
     # write jobs to overlap.
-    # ORDERING INVARIANT — no session-conf mutation may follow this point
-    # in the run: the concurrent dup_pairs write below plans against the
-    # session conf at submission time, and both static resizes (the
-    # signature floor and the membership-derived p_post above) happened
-    # strictly earlier. A future edit that moves a spark.conf.set below
-    # this submission races the background write's planning. (The light-
-    # mode restore in run_dedup's finally runs only after _finish_dedup —
-    # and thus this future — completes.)
-    dup_fut = None
     if store.enabled and not cfg.span_pass:
         from concurrent.futures import ThreadPoolExecutor
         _dup_pool = ThreadPoolExecutor(max_workers=1)
         dup_fut = _dup_pool.submit(
             store.stage, "dup_pairs",
             lambda: _expand_pairs(verified, exact_edges, None),
-            upstream=["verified_edges", "exact_groups"],
+            upstream=_edge_ups,
         )
         # if the CC chain below raises, the in-flight write must still be
         # awaited before the error propagates — never leave a daemon thread
         # writing into the store behind an exception the caller is handling
         _dup_pool.shutdown(wait=False)
         try:
-            return _finish_dedup(spark, store, cfg, checkpoint_dir, persist,
-                                 collect_metrics, light_stages, hashed, reps,
-                                 sig, exact_edges, verified, dup_fut, dropped)
+            return _finish_dedup(store, cfg, persist, hashed, reps, sig,
+                                 exact_edges, verified, dup_fut)
         except BaseException:
             from concurrent.futures import wait as _fwait
             _fwait([dup_fut])
             raise
-    return _finish_dedup(spark, store, cfg, checkpoint_dir, persist,
-                         collect_metrics, light_stages, hashed, reps, sig,
-                         exact_edges, verified, None, dropped)
+    return _finish_dedup(store, cfg, persist, hashed, reps, sig, exact_edges,
+                         verified, None)
 
 
-def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
-                  light_stages, hashed, reps, sig, exact_edges, verified,
-                  dup_fut, dropped) -> DedupResult:
+def _finish_dedup(store, cfg, persist, hashed, reps, sig, exact_edges,
+                  verified, dup_fut) -> DedupResult:
     """Clustering, span pass, pair assembly and metrics — the tail of
     ``_run_dedup_impl``, split out so the concurrent dup_pairs write can be
     awaited on the error path without a try block spanning 100 lines."""
@@ -434,21 +326,11 @@ def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
         .unionByName(exact_edges)
     )
 
-    if checkpoint_dir:
-        # CC rounds truncate lineage through RELIABLE checkpoints when a
-        # checkpoint root exists: executor-local blocks die with their
-        # executor (job failure, not recompute) under preemption
-        import os as _os
-        spark.sparkContext.setCheckpointDir(
-            _os.path.join(checkpoint_dir, "_spark_checkpoints"))
     clusters_nontrivial = store.stage(
         "clusters",
-        # light mode: CC rounds truncate lineage with localCheckpoint (the
-        # same executor-local trade the verify sub-stages make there);
-        # reliable rounds remain the default-mode behavior for preemptible
-        # clusters
-        lambda: connected_components(
-            all_edges, reliable=bool(checkpoint_dir) and not light_stages),
+        # CC rounds truncate lineage with localCheckpoint (the same
+        # executor-local trade the verify sub-stages make)
+        lambda: connected_components(all_edges),
         upstream=["verified_edges", "exact_groups"],
     )
     # the deliverable per-doc assignment table (singletons included) is
@@ -502,28 +384,23 @@ def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
         )
 
     metrics = {"lsh_threshold": cfg.lsh_threshold}
-    if checkpoint_dir:
-        # stage-level row counts come from the manifests (recorded via
-        # Observation on each write job) — zero additional Spark jobs
+    if store.enabled:
+        # row counts come from the manifests (recorded via Observation on
+        # each write job) — zero additional Spark jobs. One assignment row
+        # per doc, one signature row per distinct content.
+        def n_rows(stage: str) -> int | None:
+            return (store.manifest(stage) or {}).get("n_rows")
+
         metrics.update({
-            "n_docs": (store.manifest("docs_meta") or {}).get("n_rows"),
-            "n_distinct_content": (store.manifest("distinct_reps") or {}).get("n_rows"),
-            "n_verified_edges": (store.manifest("verified_edges") or {}).get("n_rows"),
-            "n_dropped_buckets": (store.manifest("bucket_stats") or {})
-            .get("observed", {}).get("n_dropped_buckets"),
+            "n_docs": n_rows("cluster_assignments"),
+            "n_distinct_content": n_rows("signatures"),
+            "n_verified_edges": n_rows("verified_edges"),
         })
         store.write_metrics(metrics)
-    elif collect_metrics:
-        metrics.update({
-            "n_docs": hashed.count(),
-            "n_distinct_content": reps.count(),
-            "n_verified_edges": verified.count(),
-            "n_dropped_buckets": dropped.count(),
-        })
-    # light mode: release the plan caches this run pinned (bands, stats,
-    # docs_meta) — every deliverable is parquet-backed by its heavy stage,
-    # and repeated runs in one session must not accumulate cached tables.
-    # The returned lazy fields (docs) recompute cheaply if re-scanned.
+    # release the plan caches this run pinned (bands, stats, docs_meta,
+    # exact_groups) — every deliverable is parquet-backed by its stage, and
+    # repeated runs in one session must not accumulate cached tables. The
+    # returned lazy fields (docs) recompute cheaply if re-scanned.
     store.release_caches()
     return DedupResult(
         docs=hashed.drop("content"),

@@ -116,12 +116,19 @@ class CheckpointStore:
     exposing only object-store-shaped PUT/GET/LIST ops — no rename, no
     isdir): the default ``LocalBackend`` maps them onto POSIX, and the
     MemoryBackend fake in tests proves the protocol needs nothing more, so
-    an S3/GCS backend is one class away."""
+    an S3/GCS backend is one class away.
+
+    Each stage is either a parquet checkpoint (resumable) or, when the
+    caller marks it ``light=True``, a lazy plan that is never written.
+    The pipeline checkpoints five stages: signatures, verified_edges,
+    clusters, cluster_assignments and dup_pairs. The per-stage fixed cost
+    of a checkpoint (write job + manifest PUT + read-back planning, ~1 s
+    warm) is noise at production scale but dominates small runs, so the
+    cheap stages between them stay plans."""
 
     def __init__(self, spark: SparkSession, root: str, cfg: DedupConfig,
                  run_id: str = "run", enabled: bool = True,
-                 input_fp: str | None = None, backend=None,
-                 light: bool = False):
+                 input_fp: str | None = None, backend=None):
         self.spark = spark
         self.root = root
         self.cfg = cfg
@@ -130,15 +137,7 @@ class CheckpointStore:
         self.enabled = enabled
         self.input_fp = input_fp
         self.lineage: list[dict] = []
-        # light mode: stages marked ``light=True`` skip the parquet
-        # checkpoint entirely (returned as lazy plans, optionally cached) —
-        # resumability is kept only at the expensive stage boundaries. The
-        # per-stage fixed cost of a full checkpoint (write job + manifest
-        # PUT + read-back planning, ~1s warm) is noise at production scale
-        # but dominates small runs; light mode trades cheap-stage
-        # resumability for that floor.
-        self.light = light
-        # upstream lists of stages skipped in light mode, so a heavy
+        # upstream lists of the light (unwritten) stages, so a heavy
         # stage's manifest chains through them to its nearest CHECKPOINTED
         # ancestors (a skipped stage has no manifest identity; it is a
         # deterministic function of cfg + input + those ancestors, all of
@@ -149,8 +148,8 @@ class CheckpointStore:
             self.fs = backend if backend is not None else LocalBackend(root)
 
     def release_caches(self) -> None:
-        """Unpersist every plan cache created by light-mode stages (no-op
-        otherwise). Call once the terminal stages are materialized."""
+        """Unpersist every plan cache created by light stages. Call once
+        the terminal stages are materialized."""
         for df in self._cached:
             df.unpersist()
         self._cached.clear()
@@ -224,28 +223,30 @@ class CheckpointStore:
         write job (recorded under manifest["observed"]) — stage-level
         metrics never cost their own Spark job.
 
-        ``light=True`` marks a stage cheap-to-recompute: in a light-mode
-        store it is NOT checkpointed — ``compute()`` must build a LAZY plan
-        (no jobs), returned as-is (``cache=True`` additionally persists it
-        for multi-consumer stages; materialization rides the first
-        consumer's job). Downstream heavy stages chain their manifests
-        through skipped stages to the nearest checkpointed ancestors."""
+        ``light=True`` marks a stage cheap-to-recompute: it is NOT
+        checkpointed — ``compute()`` must build a LAZY plan (no jobs),
+        returned as-is (``cache=True`` additionally persists it for
+        multi-consumer stages; materialization rides the first consumer's
+        job). Downstream heavy stages chain their manifests through light
+        stages to the nearest checkpointed ancestors.
+
+        ``min_partitions`` applies to a disabled store only (the store-less
+        path), where a one-split input must not pin a compute-heavy
+        consumer to one task."""
         upstream = upstream or []
         t0 = time.time()
         # label every Spark job fired under this stage (shows up in the UI
         # REST API / event logs — how a regression gets attributed to a
         # stage without guessing)
         self.spark.sparkContext.setJobDescription(f"stage:{name}")
-        if self.enabled and self.light and light:
+        if self.enabled and light:
             df = compute()
             # min_partitions is deliberately IGNORED here: probing
             # ``df.rdd.getNumPartitions()`` on an AQE plan executes its
             # shuffle stages eagerly (AQE must run them to know the final
             # partitioning), silently computing the whole subtree once and
-            # throwing the result away — measured as a full extra pass over
-            # the corpus in light mode. Light plans flow into consumers
-            # whose own shuffles set task counts; only a PARQUET checkpoint
-            # needs an explicit file-count floor.
+            # throwing the result away. Light plans flow into consumers
+            # whose own shuffles set task counts.
             if cache:
                 df = df.persist()
                 self._cached.append(df)
@@ -257,8 +258,8 @@ class CheckpointStore:
         if not self.enabled:
             df = compute()
             if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-                # same contract as the checkpointed path: a stage feeding a
-                # compute-heavy consumer must not pin it to one input split
+                # a stage feeding a compute-heavy consumer must not pin it
+                # to one input split
                 df = df.repartition(min_partitions)
             self.lineage.append({"stage": name, "resumed": False, "checkpointed": False})
             return df
@@ -272,14 +273,6 @@ class CheckpointStore:
                 _T.StructType.fromJson(m["schema"])).parquet(
                 self.fs.spark_path(f"{name}/{m['data_dir']}"))
         df = compute()
-        if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-            # AQE coalesces small shuffle outputs to very few partitions;
-            # a checkpoint that feeds a compute-heavy downstream stage must
-            # keep enough files for that stage's parallelism. Conditional:
-            # when the plan already carries enough partitions (e.g. its
-            # final shuffle used 2x-cores shuffle partitions), repartition
-            # would re-shuffle the full content column for nothing.
-            df = df.repartition(min_partitions)
         token = f"data-{uuid.uuid4().hex[:8]}"
         dpath = self.fs.spark_path(f"{name}/{token}")
         # row count rides on the write job itself (Observation) — no

@@ -1,6 +1,6 @@
 """Round-5 additions: trimmed Jaccard point estimate, loud non-string
 token failure, full-coverage POSIX input fingerprint, fallback-pair
-materialization gating, light-stages checkpoint mode."""
+materialization gating, checkpoints at the five heavy stages only."""
 
 import json
 import os
@@ -105,7 +105,7 @@ def test_fallback_materialization_gate_same_result(spark, monkeypatch):
     stats = lsh.bucket_stats(bands)
     base = {(r["id_a"], r["id_b"])
             for r in verify.verify_star_edges_with_fallback(bands, stats, sig, CFG).collect()}
-    monkeypatch.setenv("DSS_FB_MATERIALIZE_BAD", "0")
+    monkeypatch.setattr(verify, "FB_MATERIALIZE_BAD", 0)
     forced = {(r["id_a"], r["id_b"])
               for r in verify.verify_star_edges_with_fallback(bands, stats, sig, CFG).collect()}
     assert base == forced == {(2, 3)}
@@ -140,42 +140,51 @@ def test_fallback_short_circuit_when_no_bad_buckets(spark):
     assert "LeftAnti" not in plan, plan
 
 
-# ------------------------------------------ light-stages checkpoint mode
+# ------------------------------------- checkpoints at the heavy stages
 
 HEAVY_STAGES = {"signatures", "verified_edges", "clusters",
                 "cluster_assignments", "dup_pairs"}
 
 
-def test_light_mode_equals_full_mode(spark, tmp_path):
-    """light_stages must change WHERE materialization happens, never the
-    results: identical clusters and dup_pairs, and only the expensive
-    stage boundaries get checkpoint manifests."""
+def _manifests(root: str) -> set:
+    return {d for d in os.listdir(root)
+            if os.path.isfile(os.path.join(root, d, "manifest.json"))}
+
+
+def test_store_run_equals_storeless_run(spark, tmp_path):
+    """A checkpoint store changes WHERE materialization happens, never the
+    results: identical clusters and dup_pairs with and without one, and
+    only the five heavy stage boundaries get checkpoint manifests."""
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
 
     cpath = str(tmp_path / "corpus")
     generate_corpus(spark, 400, seed=7).write.parquet(cpath)
     corpus = spark.read.parquet(cpath)
-    full = run_dedup(spark, corpus, CFG, checkpoint_dir=str(tmp_path / "full"))
-    light = run_dedup(spark, corpus, CFG, checkpoint_dir=str(tmp_path / "light"),
-                      light_stages=True)
-    fp = sorted((r["id_a"], r["id_b"]) for r in full.dup_pairs.collect())
-    lp = sorted((r["id_a"], r["id_b"]) for r in light.dup_pairs.collect())
-    assert fp == lp and len(fp) > 0
-    fc = sorted((r["doc_id"], r["cluster_id"]) for r in full.clusters.collect())
-    lc = sorted((r["doc_id"], r["cluster_id"]) for r in light.clusters.collect())
-    assert fc == lc
-    light_manifests = {d for d in os.listdir(str(tmp_path / "light"))
-                       if os.path.isfile(os.path.join(str(tmp_path / "light"), d, "manifest.json"))}
-    assert light_manifests == HEAVY_STAGES
-    full_manifests = {d for d in os.listdir(str(tmp_path / "full"))
-                      if os.path.isfile(os.path.join(str(tmp_path / "full"), d, "manifest.json"))}
-    assert HEAVY_STAGES < full_manifests  # full mode keeps every stage
+    bare = run_dedup(spark, corpus, CFG)
+    stored = run_dedup(spark, corpus, CFG, checkpoint_dir=str(tmp_path / "ck"))
+    bp = sorted((r["id_a"], r["id_b"]) for r in bare.dup_pairs.collect())
+    sp = sorted((r["id_a"], r["id_b"]) for r in stored.dup_pairs.collect())
+    assert bp == sp and len(bp) > 0
+    bc = sorted((r["doc_id"], r["cluster_id"]) for r in bare.clusters.collect())
+    sc = sorted((r["doc_id"], r["cluster_id"]) for r in stored.clusters.collect())
+    assert bc == sc
+    assert _manifests(str(tmp_path / "ck")) == HEAVY_STAGES
+
+
+def test_run_dedup_rejects_second_mode(spark):
+    """run_dedup has one mode: light_stages=True is accepted for callers of
+    the old API, anything else fails before any Spark work."""
+    from datasketches_spark.pipeline import run_dedup
+
+    docs = spark.createDataFrame([], "id LONG, content STRING")
+    with pytest.raises(ValueError, match="single mode"):
+        run_dedup(spark, docs, CFG, light_stages=False)
 
 
 def test_light_mode_resume(spark, tmp_path):
-    """A second light-mode run over the same dir resumes every HEAVY stage
-    (manifest chains resolve through the skipped light stages) and yields
+    """A second run over the same dir resumes every HEAVY stage (manifest
+    chains resolve through the unwritten light stages) and yields
     identical pairs."""
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
@@ -184,36 +193,72 @@ def test_light_mode_resume(spark, tmp_path):
     generate_corpus(spark, 400, seed=9).write.parquet(cpath)
     corpus = spark.read.parquet(cpath)
     ckpt = str(tmp_path / "ckpt")
-    r1 = run_dedup(spark, corpus, CFG, checkpoint_dir=ckpt, light_stages=True)
+    r1 = run_dedup(spark, corpus, CFG, checkpoint_dir=ckpt)
     p1 = sorted((r["id_a"], r["id_b"]) for r in r1.dup_pairs.collect())
-    r2 = run_dedup(spark, corpus, CFG, checkpoint_dir=ckpt, light_stages=True)
+    r2 = run_dedup(spark, corpus, CFG, checkpoint_dir=ckpt)
     p2 = sorted((r["id_a"], r["id_b"]) for r in r2.dup_pairs.collect())
     assert p1 == p2
     with open(os.path.join(ckpt, "metrics.json")) as f:
         m = json.load(f)
     resumed = {s["stage"] for s in m["lineage"] if s.get("resumed")}
     assert resumed == HEAVY_STAGES, m["lineage"]
+    assert r2.metrics == r1.metrics
 
 
-def test_light_mode_cross_mode_never_stale_resumes(spark, tmp_path):
-    """A light-mode run over a FULL-mode checkpoint dir (and vice versa)
-    must recompute, not resume against mismatched upstream chains."""
+def test_run_metrics_counts_not_null(spark, tmp_path):
+    """metrics.json and DedupResult.metrics report every count (no nulls),
+    equal to the counts computed directly from the corpus."""
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
 
     cpath = str(tmp_path / "corpus")
-    generate_corpus(spark, 200, seed=3).write.parquet(cpath)
+    generate_corpus(spark, 400, seed=7).write.parquet(cpath)
     corpus = spark.read.parquet(cpath)
     ckpt = str(tmp_path / "ckpt")
-    run_dedup(spark, corpus, CFG, checkpoint_dir=ckpt)  # full
-    r2 = run_dedup(spark, corpus, CFG, checkpoint_dir=ckpt, light_stages=True)
+    res = run_dedup(spark, corpus, CFG, checkpoint_dir=ckpt)
     with open(os.path.join(ckpt, "metrics.json")) as f:
         m = json.load(f)
-    # the heavy stages were written by full mode with different upstream
-    # chains -> light mode recomputes them (no silent stale resume)
-    resumed = {s["stage"] for s in m["lineage"] if s.get("resumed")}
-    assert resumed == set(), m["lineage"]
-    assert r2.dup_pairs.count() >= 0
+    counts = {k for k in res.metrics if k.startswith("n_")}
+    assert counts == {"n_docs", "n_distinct_content", "n_verified_edges"}
+    assert all(m[k] is not None and m[k] == res.metrics[k] for k in counts), m
+    assert res.metrics["n_docs"] == 400
+    assert res.metrics["n_distinct_content"] == (
+        corpus.select(F.sha2("content", 256)).distinct().count())
+    assert res.metrics["n_verified_edges"] == res.verified_edges.count() > 0
+
+
+def test_checkpoint_store_mismatched_upstream_chain_recomputes(spark, tmp_path):
+    """A heavy stage chains its manifest through light (unwritten) stages
+    to its nearest checkpointed ancestors. When a later run resolves a
+    DIFFERENT chain for it, the stage recomputes instead of resuming
+    stale output."""
+    from datasketches_spark.plans.checkpoints import CheckpointStore
+
+    root = str(tmp_path / "ck")
+    calls = []
+
+    def heavy():
+        calls.append(1)
+        return spark.range(3)
+
+    def run(light_upstream):
+        s = CheckpointStore(spark, root, CFG, input_fp="fp")
+        s.stage("a", lambda: spark.range(5))
+        s.stage("z", lambda: spark.range(7))
+        s.stage("mid", lambda: spark.range(1), upstream=light_upstream, light=True)
+        s.stage("heavy", heavy, upstream=["mid"]).count()
+        return s
+
+    run(["a"])
+    assert _manifests(root) == {"a", "z", "heavy"}
+    with open(os.path.join(root, "heavy", "manifest.json")) as f:
+        assert set(json.load(f)["upstream_hashes"]) == {"a"}
+    s2 = run(["a"])  # same chain: resumes
+    assert len(calls) == 1
+    assert {e["stage"] for e in s2.lineage if e.get("resumed")} == {"a", "z", "heavy"}
+    s3 = run(["z"])  # the light stage now hangs off another ancestor
+    assert len(calls) == 2
+    assert "heavy" not in {e["stage"] for e in s3.lineage if e.get("resumed")}
 
 
 # ---------------------------------------- media near-dup pairs (planted)
@@ -302,24 +347,6 @@ def test_parse_extra_conf():
     assert parse_extra_conf(" a = 1 ; ;noequals; b = x=y ") == {
         "a": "1", "b": "x=y"}
     assert parse_extra_conf("a=1;a=2") == {"a": "2"}
-
-
-def test_run_dedup_light_restores_session_conf(spark):
-    """run_dedup(light_stages=True) mutates spark.sql.shuffle.partitions
-    twice mid-run (signature sizing, post-LSH resize) and disables AQE;
-    both must be restored on exit so later queries in the same session
-    plan under the caller's configuration."""
-    from datasketches_spark.config import DedupConfig
-    from datasketches_spark.pipeline import run_dedup
-    from datasketches_spark.sources.corpus import generate_corpus
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    docs = generate_corpus(spark, 200, seed=7)
-    res = run_dedup(spark, docs, DedupConfig(), light_stages=True)
-    res.clusters.count()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
 
 
 # ----------------- shared participant-signature subtree (round-5 session 2)

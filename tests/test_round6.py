@@ -216,11 +216,12 @@ def test_fallback_heavy_regime_e2e(spark, tmp_path_factory, monkeypatch, with_st
     corpus = _adversarial_corpus(spark)
     # the low cap forces the adversarial branch: fb_pairs materialization
     # and the distributed bad-bucket count instead of the bounded collect
-    monkeypatch.setenv("DSS_FB_MATERIALIZE_BAD", "1")
+    from datasketches_spark.operators import verify
+
+    monkeypatch.setattr(verify, "FB_MATERIALIZE_BAD", 1)
     cfg = DedupConfig()
     ckpt = (str(tmp_path_factory.mktemp("adv_ckpt")) if with_store else None)
-    res = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt,
-                    light_stages=not with_store)
+    res = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt)
     clusters = {r["doc_id"]: r["cluster_id"] for r in res.clusters.collect()}
     assert len(clusters) == 100
     # every planted near-dup pair clustered together (recall through the
@@ -236,103 +237,50 @@ def test_fallback_heavy_regime_e2e(spark, tmp_path_factory, monkeypatch, with_st
         assert sum(1 for v in clusters.values() if v == clusters[2000 + s]) == 1
 
 
-def test_concurrent_light_runs_restore_confs(spark, tmp_path_factory):
-    """VERDICT r5 item 6: two concurrent run_dedup(light_stages=True)
-    calls on ONE session must both produce correct results and leave the
-    session confs exactly as they were (the depth-counted conf window —
-    without it the second run snapshots the first run's transient values
-    and restores garbage)."""
+def test_run_dedup_leaves_session_conf_unchanged(spark, tmp_path_factory,
+                                                monkeypatch):
+    """run_dedup switches AQE off for its duration and writes no other
+    session conf: the whole session conf is unchanged after one run, and
+    after two concurrent runs on ONE session (the depth-counted AQE window
+    — without it the second run snapshots the first run's "false" and
+    restores it). The concurrent runs still produce identical outputs,
+    equal to the serial run's."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.conf import RuntimeConfig
 
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
 
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    writes = []
+    conf_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return conf_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    before = dict(spark.conf.getAll)
     corpus = generate_corpus(spark, 400, seed=42)
     cfg = DedupConfig()
 
     def one(tag):
         ckpt = str(tmp_path_factory.mktemp(f"cc_{tag}"))
-        res = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt,
-                        light_stages=True)
+        res = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt)
         return ({r["doc_id"]: r["cluster_id"] for r in res.clusters.collect()},
                 {(r["id_a"], r["id_b"]) for r in res.dup_pairs.collect()})
 
+    _, ref = one("serial")
+    assert dict(spark.conf.getAll) == before
+    # mid-run writes would not show in the before/after comparison
+    assert writes == ["spark.sql.adaptive.enabled"] * 2, writes
     with ThreadPoolExecutor(max_workers=2) as pool:
         fa, fb = pool.submit(one, "a"), pool.submit(one, "b")
         ca, pa = fa.result()
         cb, pb = fb.result()
-    # identical outputs from both concurrent runs...
-    assert pa == pb and len(pa) > 0
+    assert pa == pb == ref and len(pa) > 0
     assert set(ca) == set(cb)
-    # ...and the serial reference
-    ckpt = str(tmp_path_factory.mktemp("cc_serial"))
-    ref = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt, light_stages=True)
-    assert {(r["id_a"], r["id_b"]) for r in ref.dup_pairs.collect()} == pa
-    # confs restored exactly
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
-
-
-def test_two_tier_verify_identical_outputs(spark, tmp_path_factory):
-    """cfg.verify_mh_band (two-tier verification): pair outputs must be
-    identical with the band on vs off — on the planted bench corpus AND
-    on the adversarial boilerplate corpus (the regime the tier-1 prune
-    targets: candidates far below threshold never ship KMV entries)."""
-    from datasketches_spark.pipeline import run_dedup
-    from datasketches_spark.sources.corpus import generate_corpus
-
-    for corpus in (generate_corpus(spark, 400, seed=42),
-                   _adversarial_corpus(spark)):
-        base = run_dedup(spark, corpus, DedupConfig(), light_stages=True)
-        tier = run_dedup(spark, corpus, DedupConfig(verify_mh_band=0.35),
-                         light_stages=True)
-        pb = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9),
-               round(r["jaccard_minhash"], 9))
-              for r in base.dup_pairs.collect()}
-        pt = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9),
-               round(r["jaccard_minhash"], 9))
-              for r in tier.dup_pairs.collect()}
-        assert pb == pt and len(pb) > 0
-
-
-def test_two_tier_verify_filter_mode_unit(spark):
-    """Unit pin: filter-mode verify_pairs with the band drops exactly the
-    pairs the full computation would have dropped; a pair whose MinHash
-    estimate sits in the band but whose KMV is below threshold still gets
-    exact KMV treatment (not a tier-1 guess)."""
-    from datasketches_spark.operators import verify
-
-    n_perm = DedupConfig().num_perm
-    shared = list(range(1000, 1090))
-    mh_same = [0] * n_perm
-    mh_half = [0] * (n_perm // 2) + list(range(1, n_perm // 2 + 1))
-    rows = [
-        (1, mh_same, sorted(shared + [1101]), kmv.MAX_THETA_LONG),
-        (2, mh_same, sorted(shared + [2101]), kmv.MAX_THETA_LONG),   # J ~ 0.978 vs 1
-        (3, mh_half, sorted(range(5000, 5100)), kmv.MAX_THETA_LONG),  # J = 0 vs 1, mh in band
-        (4, list(range(9, n_perm + 9)), sorted(range(7000, 7100)), kmv.MAX_THETA_LONG),  # mh 0
-    ]
-    sig = spark.createDataFrame(
-        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG")
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4)], "id_a LONG, id_b LONG")
-    cfg_off = DedupConfig()
-    cfg_on = DedupConfig(verify_mh_band=0.35)
-    off = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9))
-           for r in verify.verify_pairs(pairs, sig, cfg_off).collect()}
-    on = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9))
-          for r in verify.verify_pairs(pairs, sig, cfg_on).collect()}
-    assert off == on == {(1, 2, round(90 / 92, 9))}
-    # keep_below_threshold mode: same pass/fail split either way
-    off_all = {(r["id_a"], r["id_b"], r["jaccard_kmv"] >= cfg_off.jaccard_threshold)
-               for r in verify.verify_pairs(pairs, sig, cfg_off,
-                                            keep_below_threshold=True).collect()}
-    on_all = {(r["id_a"], r["id_b"], r["jaccard_kmv"] >= cfg_on.jaccard_threshold)
-              for r in verify.verify_pairs(pairs, sig, cfg_on,
-                                           keep_below_threshold=True).collect()}
-    assert off_all == on_all == {(1, 2, True), (1, 3, False), (1, 4, False)}
+    assert dict(spark.conf.getAll) == before
 
 
 def test_language_id_matches_specification_form(spark, docs):
