@@ -349,6 +349,33 @@ def test_parse_extra_conf():
     assert parse_extra_conf("a=1;a=2") == {"a": "2"}
 
 
+
+def test_run_dedup_light_restores_session_conf(spark, monkeypatch):
+    """run_dedup switches AQE off for its duration and writes no other
+    session conf: the whole session conf is unchanged on exit, so later
+    queries in the same session plan under the caller's configuration,
+    and the only conf writes made mid-run are the AQE off/restore pair."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from datasketches_spark.pipeline import run_dedup
+    from datasketches_spark.sources.corpus import generate_corpus
+
+    writes = []
+    conf_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return conf_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    before = dict(spark.conf.getAll)
+    docs = generate_corpus(spark, 200, seed=7)
+    res = run_dedup(spark, docs, DedupConfig(), light_stages=True)
+    res.clusters.count()
+    assert dict(spark.conf.getAll) == before
+    # mid-run writes would not show in the before/after comparison
+    assert writes == ["spark.sql.adaptive.enabled"] * 2, writes
+
 # ----------------- shared participant-signature subtree (round-5 session 2)
 
 def test_participant_sig_gate_on_off_same_result(spark):

@@ -237,49 +237,38 @@ def test_fallback_heavy_regime_e2e(spark, tmp_path_factory, monkeypatch, with_st
         assert sum(1 for v in clusters.values() if v == clusters[2000 + s]) == 1
 
 
-def test_run_dedup_leaves_session_conf_unchanged(spark, tmp_path_factory,
-                                                monkeypatch):
-    """run_dedup switches AQE off for its duration and writes no other
-    session conf: the whole session conf is unchanged after one run, and
-    after two concurrent runs on ONE session (the depth-counted AQE window
-    — without it the second run snapshots the first run's "false" and
-    restores it). The concurrent runs still produce identical outputs,
-    equal to the serial run's."""
+def test_concurrent_light_runs_restore_confs(spark, tmp_path_factory):
+    """Two concurrent run_dedup calls on ONE session must both produce
+    correct results and leave the whole session conf exactly as it was
+    (the depth-counted AQE window — without it the second run snapshots
+    the first run's "false" and restores it)."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql.conf import RuntimeConfig
 
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
 
-    writes = []
-    conf_set = RuntimeConfig.set
-
-    def recording_set(self, key, value):
-        writes.append(key)
-        return conf_set(self, key, value)
-
-    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
     before = dict(spark.conf.getAll)
     corpus = generate_corpus(spark, 400, seed=42)
     cfg = DedupConfig()
 
     def one(tag):
         ckpt = str(tmp_path_factory.mktemp(f"cc_{tag}"))
-        res = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt)
+        res = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt,
+                        light_stages=True)
         return ({r["doc_id"]: r["cluster_id"] for r in res.clusters.collect()},
                 {(r["id_a"], r["id_b"]) for r in res.dup_pairs.collect()})
 
-    _, ref = one("serial")
-    assert dict(spark.conf.getAll) == before
-    # mid-run writes would not show in the before/after comparison
-    assert writes == ["spark.sql.adaptive.enabled"] * 2, writes
     with ThreadPoolExecutor(max_workers=2) as pool:
         fa, fb = pool.submit(one, "a"), pool.submit(one, "b")
         ca, pa = fa.result()
         cb, pb = fb.result()
-    assert pa == pb == ref and len(pa) > 0
+    # identical outputs from both concurrent runs...
+    assert pa == pb and len(pa) > 0
     assert set(ca) == set(cb)
+    # ...and the serial reference
+    _, ref = one("serial")
+    assert ref == pa
+    # conf restored exactly
     assert dict(spark.conf.getAll) == before
 
 
